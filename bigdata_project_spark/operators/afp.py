@@ -53,6 +53,7 @@ layer; BASELINE north-star multimodal + dedup pillars.
 
 from __future__ import annotations
 
+import os
 from typing import Iterator
 
 import pandas as pd
@@ -66,6 +67,7 @@ from bigdata_project_spark.operators.dedup import (
     sql_pigeonhole_hamming,
     sql_pigeonhole_verify,
 )
+from bigdata_project_spark.operators.staging import chunked_stream
 from bigdata_project_spark.registry import REGISTRY, query
 from bigdata_project_spark.tables import load
 
@@ -375,8 +377,6 @@ def _afp_probe_batch(
     pair emission THEN the store upsert, both batch-id-keyed. Module-
     level (not a closure) so tests/test_afp.py can redeliver batches
     directly and pin the idempotency claims the docstring makes."""
-    import os
-
     out_dir = os.path.join(out_store, f"b{bid}")
     sig_dir = os.path.join(seen_store, f"b{bid}")
     if os.path.exists(os.path.join(out_dir, "_SUCCESS")) and os.path.exists(
@@ -455,37 +455,12 @@ def run_afp_ingest_stream(
     16-char signatures against the store — the store grows with
     CONTENT, never re-fingerprints old media, and in production is an
     indexed upsert surface keyed by the same 16-bit blocks."""
-    import os
-    import shutil
-    import tempfile
-
     docs = load(spark, sf_dir, "documents").select("doc_id")
-    work = tempfile.mkdtemp(prefix="afp_stream_")
-    src_dir = os.path.join(work, "src")
-    seen_store = os.path.join(work, "seen")
-    out_store = os.path.join(work, "out")
-    try:
-        # bounds from the cheap doc_id scan, and each chunk filters
-        # doc_ids BEFORE the synthesize Arrow stage — the corpus is
-        # encoded exactly once across the staged chunks (a filter
-        # after mapInPandas would re-synthesize everything per chunk
-        # and discard (n_chunks-1)/n_chunks of it)
-        lo, hi = docs.agg(F.min("doc_id"), F.max("doc_id")).first()
-        if lo is None:
-            lo, hi = 0, 0
-        step = max(1, (int(hi) - int(lo)) // n_chunks + 1)
-        # one-pass staging (r15): the probe's emitted pair set is
-        # delivery-order-invariant (a cross-batch pair is emitted by
-        # whichever batch arrives second; the final reader unions all
-        # committed versions), so ALL chunks stage in ONE synthesize
-        # pass + partitionBy write instead of n_chunks filtered
-        # passes — see operators/staging.py. The corpus is still
-        # encoded exactly once.
-        from bigdata_project_spark.operators.staging import stage_chunks_one_pass
-
-        stage_chunks_one_pass(
-            _afp_payloads_df(spark, sf_dir, docs=docs), "doc_id", int(lo), step, src_dir
-        )
+    # key bounds from the cheap doc_id scan: an aggregate over the
+    # payloads would run the synthesize Arrow stage a second time
+    payloads = _afp_payloads_df(spark, sf_dir, docs=docs)
+    with chunked_stream(payloads, "doc_id", n_chunks, bounds=docs) as cs:
+        seen_store, out_store = cs.path("seen"), cs.path("out")
         # schema-only inits so the final readers work on empty input
         empty_sigs = docs.limit(0).select(
             F.col("doc_id"), F.lit("").alias("afp64")
@@ -495,42 +470,13 @@ def run_afp_ingest_stream(
             F.col("doc_id").alias("doc_a"),
             F.col("doc_id").alias("doc_b"),
             F.lit(0).cast("int").alias("hamming"),
-        ).limit(0).write.parquet(os.path.join(out_store, "b_init"))
-
-        def probe(bdf: DataFrame, bid: int) -> None:
-            _afp_probe_batch(spark, bdf, bid, seen_store, out_store)
-
-        stream = (
-            spark.readStream.schema("doc_id long, payload binary")
-            .option("maxFilesPerTrigger", "1")
-            .option("recursiveFileLookup", "true")
-            .parquet(src_dir)
-        )
-        sq = (
-            stream.writeStream.foreachBatch(probe)
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        sq.awaitTermination()
-        n_batches = len(sq.recentProgress)
-        # register the checkpoint blocks for the framework's release
-        # path: localCheckpoint blocks are invisible to
-        # DataFrame.unpersist, so an unregistered one leaks until a
-        # sweep_all (caching.py contract — the materializing caller's
-        # release_cached(spark) frees these)
-        from bigdata_project_spark.caching import persistent_rdd_ids, track_rdd_ids
-
-        before = persistent_rdd_ids(spark)
-        res = (
-            spark.read.option("recursiveFileLookup", "true")
+        ).write.parquet(os.path.join(out_store, "b_init"))
+        res, n_batches = cs.run(
+            lambda bdf, bid: _afp_probe_batch(spark, bdf, bid, seen_store, out_store),
+            lambda: spark.read.option("recursiveFileLookup", "true")
             .schema("doc_a long, doc_b long, hamming int")
-            .parquet(out_store)
-            .localCheckpoint(eager=True)
+            .parquet(out_store),
         )
-        track_rdd_ids(spark, persistent_rdd_ids(spark) - before)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
     return res.orderBy("doc_a", "doc_b"), n_batches
 
 

@@ -54,6 +54,7 @@ from bigdata_project_spark.operators.similarity import (
     _SQL_NORMED,
     with_norm,
 )
+from bigdata_project_spark.operators.staging import AscendingBatches, chunked_stream
 from bigdata_project_spark.registry import query
 from bigdata_project_spark.tables import load
 
@@ -369,6 +370,59 @@ def _sem_assign(emb: DataFrame, cent: DataFrame, q: int) -> DataFrame:
     )
 
 
+def _cos(a: str, b: str):
+    return _dot_col(f"{a}.embedding", f"{b}.embedding") / (
+        F.sqrt(F.col(f"{a}.norm_sq")) * F.sqrt(F.col(f"{b}.norm_sq"))
+    )
+
+
+def _sem_probe(bcells: DataFrame, ccells: DataFrame, earlier: DataFrame) -> DataFrame:
+    """(vec_id, cell, dup_of, is_new_unique) for each batch cell row:
+    the minimum-id near-duplicate among the corpus cells (first) and
+    the `earlier` batch members with a smaller vec_id (then). Shared
+    by the batch form (earlier = the batch) and the streaming body
+    (earlier = seen store + micro-batch).
+
+    r14 optimization (guide §2.4 "share one exchange"): the corpus
+    probe and the within-batch probe are BOTH cell equi-joins of the
+    same batch side, so they run as ONE join against the flagged
+    union of the two match sets and split back in the aggregate (min
+    over corpus hits / min over earlier-batch hits) — one cell-keyed
+    join + one aggregate instead of two of each, same
+    dup_corpus/dup_batch values row for row."""
+    b = bcells.alias("b")
+    o = (
+        ccells.withColumn("is_corpus", F.lit(True))
+        .unionByName(earlier.withColumn("is_corpus", F.lit(False)))
+        .alias("o")
+    )
+    hits = (
+        b.join(
+            o,
+            (F.col("b.cell") == F.col("o.cell"))
+            & (F.col("o.is_corpus") | (F.col("o.vec_id") < F.col("b.vec_id"))),
+        )
+        .filter(_cos("b", "o") >= SEMDEDUP_TAU)
+        .groupBy(F.col("b.vec_id").alias("vec_id"))
+        .agg(
+            F.min(F.when(F.col("o.is_corpus"), F.col("o.vec_id"))).alias("dup_corpus"),
+            F.min(F.when(~F.col("o.is_corpus"), F.col("o.vec_id"))).alias("dup_batch"),
+        )
+    )
+    return (
+        bcells.select("vec_id", "cell")
+        .join(hits, "vec_id", "left")
+        .select(
+            "vec_id",
+            "cell",
+            F.coalesce("dup_corpus", "dup_batch").alias("dup_of"),
+            (F.col("dup_corpus").isNull() & F.col("dup_batch").isNull())
+            .cast("int")
+            .alias("is_new_unique"),
+        )
+    )
+
+
 _SQL_INCREMENTAL_ORACLE = f"""
     WITH {_SQL_NORMED},
     corpus AS (SELECT * FROM normed WHERE vec_id % {_SEM_BATCH_MOD} <> {_SEM_BATCH_MOD - 1}),
@@ -459,85 +513,37 @@ def dedup_semantic_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     bcells = cells.filter(is_batch)
     ccells = cells.filter(~is_batch)
 
-    def _cos(a: str, b: str):
-        return _dot_col(f"{a}.embedding", f"{b}.embedding") / (
-            F.sqrt(F.col(f"{a}.norm_sq")) * F.sqrt(F.col(f"{b}.norm_sq"))
-        )
-
-    # r14 optimization (guide §2.4 "share one exchange"): the corpus
-    # probe and the within-batch probe are BOTH cell equi-joins of
-    # the same batch side, so they run as ONE join against the
-    # flagged union of the two match sets and split back in the
-    # aggregate (min over corpus hits / min over earlier-batch hits)
-    # — one cell-keyed join + one aggregate instead of two of each,
-    # same dup_corpus/dup_batch values row for row.
-    b = bcells.alias("b")
-    o = (
-        ccells.withColumn("is_corpus", F.lit(True))
-        .unionByName(bcells.withColumn("is_corpus", F.lit(False)))
-        .alias("o")
-    )
-    hits = (
-        b.join(
-            o,
-            (F.col("b.cell") == F.col("o.cell"))
-            & (F.col("o.is_corpus") | (F.col("o.vec_id") < F.col("b.vec_id"))),
-        )
-        .filter(_cos("b", "o") >= SEMDEDUP_TAU)
-        .groupBy(F.col("b.vec_id").alias("vec_id"))
-        .agg(
-            F.min(F.when(F.col("o.is_corpus"), F.col("o.vec_id"))).alias("dup_corpus"),
-            F.min(F.when(~F.col("o.is_corpus"), F.col("o.vec_id"))).alias("dup_batch"),
-        )
-    )
-    return (
-        bcells.select("vec_id", "cell")
-        .join(hits, "vec_id", "left")
-        .select(
-            "vec_id",
-            "cell",
-            F.coalesce("dup_corpus", "dup_batch").alias("dup_of"),
-            (F.col("dup_corpus").isNull() & F.col("dup_batch").isNull())
-            .cast("int")
-            .alias("is_new_unique"),
-        )
-    )
+    return _sem_probe(bcells, ccells, bcells)
 
 
 def run_semantic_ingest_stream(
     spark: SparkSession, sf_dir: str, n_chunks: int = 3
 ) -> tuple[DataFrame, int]:
     """Incremental SemDeDup as a STREAMING ingest pipeline: the batch
-    increment (every 10th vec_id) arrives as a file-source stream in
-    `n_chunks` vec_id-ordered micro-batches (availableNow +
-    maxFilesPerTrigger=1); a foreachBatch stage probes each
-    micro-batch against the STANDING index — centroids + derived Q +
-    cell-keyed corpus cells, built once from the corpus before the
-    stream starts — and against the cross-batch SEEN store (batch
-    members from earlier micro-batches, persisted cell-keyed parquet,
-    bounded by the increment size, never the corpus). Returns
-    (result, n_micro_batches).
+    increment (every 10th vec_id) arrives as `n_chunks` vec_id-ordered
+    micro-batches (the staging.py harness); a foreachBatch stage
+    probes each micro-batch against the STANDING index — centroids +
+    derived Q + cell-keyed corpus cells, built once from the corpus
+    before the stream starts — and against the cross-batch SEEN store
+    (batch members from earlier micro-batches, persisted cell-keyed
+    parquet, bounded by the increment size, never the corpus).
+    Returns (result, n_micro_batches).
 
     Because chunks are vec_id-ordered and the within-batch probe keys
     on e.vec_id < b.vec_id, the union of per-micro-batch results is
     EXACTLY `dedup_semantic_incremental`'s batch answer — so the
     streaming form shares its DuckDB oracle, and the chunked replay
     (cross-batch hits only discoverable through the restored seen
-    store) is verified against it end to end.
+    store) is verified against it end to end. Every cross-batch
+    dup_of hit assumes earlier vec_ids are already in the seen store:
+    the harness pins that order and `AscendingBatches` asserts it.
 
     Scale: per micro-batch work is O(batch x cell_load) — the
     broadcast centroid assign plus ONE flagged cell equi-join against
-    corpus cells union seen cells (r14: the two probes share the
-    exchange). The seen store grows with the increment, not the
-    corpus, and is cell-keyed so each probe touches only the batch's
-    cells. A production deployment swaps the staged parquet chunks
-    for the Kafka source and the seen store for the index's upsert
-    surface; the foreachBatch body is unchanged."""
-    import os
-    import shutil
-    import tempfile
-    import time
-
+    corpus cells union seen cells (`_sem_probe`). The seen store
+    grows with the increment, not the corpus, and is cell-keyed so
+    each probe touches only the batch's cells; in production it is
+    the index's upsert surface."""
     emb = with_norm(load(spark, sf_dir, "embeddings"))
     is_batch = F.col("vec_id") % _SEM_BATCH_MOD == _SEM_BATCH_MOD - 1
     corpus = emb.filter(~is_batch)
@@ -545,144 +551,27 @@ def run_semantic_ingest_stream(
     cent = tracked_persist(_sem_centroids(corpus))
     ccells = tracked_persist(_sem_assign(corpus, cent, q))
     ccells.count()  # materialize the standing index before the stream
-
-    work = tempfile.mkdtemp(prefix="sem_ingest_")
-    src_dir = os.path.join(work, "src")
-    seen_store = os.path.join(work, "seen")
-    out_store = os.path.join(work, "out")
+    batch_members = emb.filter(is_batch).select("vec_id", "embedding", "norm_sq")
     try:
-        # stage the increment as vec_id-ordered chunks; the file
-        # source orders by mtime with UNSPECIFIED tie order, so pin
-        # delivery order with explicitly increasing mtimes per chunk
-        # (advisor r9) rather than relying on path-order ties
-        batch_members = emb.filter(is_batch).select("vec_id", "embedding", "norm_sq")
-        lo, hi = batch_members.agg(F.min("vec_id"), F.max("vec_id")).first()
-        empty_increment = lo is None
-        if empty_increment:  # empty increment: stage a schema-only chunk so
-            lo, hi = 0, 0  # the stream still runs and the result store exists
-        step = max(1, (int(hi) - int(lo)) // n_chunks + 1)
-        base_mtime = int(time.time()) - 3600 * n_chunks
-        # one-pass staging (r15): ONE partitionBy job writes every
-        # chunk (operators/staging.py), then the SAME explicit-mtime
-        # discipline as before pins delivery order — this stream's
-        # in-order contract lives in the mtimes (set below) and the
-        # loud out-of-order guard in probe(), not in write order.
-        # An entirely empty increment still stages one empty chunk
-        # file the old way so the stream has a file to trigger on
-        # and the result store exists (the empty-twin sweep path).
-        if empty_increment:
-            batch_members.coalesce(1).write.mode("overwrite").parquet(
-                os.path.join(src_dir, "chunk=0")
-            )
-        else:
-            from bigdata_project_spark.operators.staging import (
-                stage_chunks_one_pass,
-            )
+        with chunked_stream(batch_members, "vec_id", n_chunks) as cs:
+            seen_store, out_store = cs.path("seen"), cs.path("out")
+            ccells.limit(0).write.parquet(seen_store)  # schema-only init
+            in_order = AscendingBatches("semantic ingest stream")
 
-            stage_chunks_one_pass(batch_members, "vec_id", int(lo), step, src_dir)
-        for i in range(n_chunks):
-            chunk_dir = os.path.join(src_dir, f"chunk={i}")
-            if not os.path.isdir(chunk_dir):
-                continue  # empty range: no file, no micro-batch (same
-                # final stores — an empty batch merged nothing)
-            t = base_mtime + i * 3600  # one hour apart: coarse-mtime-FS-proof
-            for root, _dirs, files in os.walk(chunk_dir):
-                for fn in files:
-                    os.utime(os.path.join(root, fn), (t, t))
-        ccells.limit(0).write.parquet(seen_store)  # schema-only init
+            def probe(bdf: DataFrame, _bid: int) -> None:
+                bcells = _sem_assign(bdf, cent, q).persist()
+                in_order.check(*bcells.agg(F.min("vec_id"), F.max("vec_id")).first())
+                prior = spark.read.parquet(seen_store).unionByName(bcells)
+                _sem_probe(bcells, ccells, prior).write.mode("append").parquet(out_store)
+                # the seen-store upsert: this micro-batch's members become
+                # visible to every later one (bounded by increment size)
+                bcells.write.mode("append").parquet(seen_store)
+                bcells.unpersist()
 
-        def cos(x: str, y: str):
-            return _dot_col(f"{x}.embedding", f"{y}.embedding") / (
-                F.sqrt(F.col(f"{x}.norm_sq")) * F.sqrt(F.col(f"{y}.norm_sq"))
-            )
-
-        max_seen_vec = [-1]  # foreachBatch runs driver-side
-
-        def probe(bdf: DataFrame, _bid: int) -> None:
-            bcells = _sem_assign(bdf, cent, q).persist()
-            b_lo, b_hi = bcells.agg(F.min("vec_id"), F.max("vec_id")).first()
-            if b_lo is not None:
-                # oracle equality requires in-order delivery: every
-                # cross-batch dup_of hit assumes earlier vec_ids are
-                # already in the seen store. Fail loudly on an
-                # out-of-order micro-batch instead of silently
-                # dropping hits (advisor r9).
-                if int(b_lo) <= max_seen_vec[0]:
-                    raise RuntimeError(
-                        f"semantic ingest stream delivered out of order: "
-                        f"batch min vec_id {b_lo} <= max already seen "
-                        f"{max_seen_vec[0]}"
-                    )
-                max_seen_vec[0] = int(b_hi)
-            # one flagged cell-keyed join per micro-batch instead of
-            # two (the dedup_semantic_incremental merged-probe shape,
-            # guide §2.4): corpus index and seen-store-plus-batch
-            # union with an is_corpus flag, min split in the aggregate
-            b = bcells.alias("b")
-            prior = spark.read.parquet(seen_store).unionByName(bcells)
-            o = (
-                ccells.withColumn("is_corpus", F.lit(True))
-                .unionByName(prior.withColumn("is_corpus", F.lit(False)))
-                .alias("o")
-            )
-            hits = (
-                b.join(
-                    o,
-                    (F.col("b.cell") == F.col("o.cell"))
-                    & (
-                        F.col("o.is_corpus")
-                        | (F.col("o.vec_id") < F.col("b.vec_id"))
-                    ),
-                )
-                .filter(cos("b", "o") >= SEMDEDUP_TAU)
-                .groupBy(F.col("b.vec_id").alias("vec_id"))
-                .agg(
-                    F.min(F.when(F.col("o.is_corpus"), F.col("o.vec_id"))).alias(
-                        "dup_corpus"
-                    ),
-                    F.min(F.when(~F.col("o.is_corpus"), F.col("o.vec_id"))).alias(
-                        "dup_batch"
-                    ),
-                )
-            )
-            out = (
-                bcells.select("vec_id", "cell")
-                .join(hits, "vec_id", "left")
-                .select(
-                    "vec_id",
-                    "cell",
-                    F.coalesce("dup_corpus", "dup_batch").alias("dup_of"),
-                    (F.col("dup_corpus").isNull() & F.col("dup_batch").isNull())
-                    .cast("int")
-                    .alias("is_new_unique"),
-                )
-            )
-            out.write.mode("append").parquet(out_store)
-            # the seen-store upsert: this micro-batch's members become
-            # visible to every later one (bounded by increment size)
-            bcells.write.mode("append").parquet(seen_store)
-            bcells.unpersist()
-
-        stream = (
-            spark.readStream.schema(batch_members.schema)
-            .option("maxFilesPerTrigger", "1")
-            .option("recursiveFileLookup", "true")
-            .parquet(src_dir)
-        )
-        sq = (
-            stream.writeStream.foreachBatch(probe)
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        sq.awaitTermination()
-        n_batches = len(sq.recentProgress)
-        res = spark.read.parquet(out_store).localCheckpoint(eager=True)
+            return cs.run(probe, lambda: spark.read.parquet(out_store))
     finally:
-        shutil.rmtree(work, ignore_errors=True)
         ccells.unpersist()
         cent.unpersist()
-    return res, n_batches
 
 
 @query(

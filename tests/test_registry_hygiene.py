@@ -170,3 +170,17 @@ def test_no_bare_double_decimal_casts_outside_exact():
         "bare Spark-side double->DECIMAL casts (use exact.dcast/dsum/davg/SPARK_SQL_DSUM):\n"
         + "\n".join(offenders)
     )
+
+
+def test_one_chunked_stream_harness():
+    """The chunked availableNow replay (maxFilesPerTrigger=1) lives in
+    operators/staging.py only; every incremental foreachBatch stream
+    goes through it, so the staging, start and teardown plumbing
+    cannot be re-spelled per stream."""
+    import pathlib
+
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "bigdata_project_spark"
+    users = sorted(
+        str(f.relative_to(pkg)) for f in pkg.rglob("*.py") if "maxFilesPerTrigger" in f.read_text()
+    )
+    assert users == ["operators/staging.py"], users
