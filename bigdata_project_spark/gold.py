@@ -5,11 +5,26 @@ Materializes curated gold tables from the registry's queries into a
 parquet serving area. Dashboards (or a `spark.sql` thrift endpoint,
 or a document-store export via foreachBatch) read these instead of
 recomputing; the build is idempotent (overwrite per table).
+
+The tables are independent, so they are built concurrently: one
+driver thread per table, each building its query and submitting its
+write. A gold table is a handful of small jobs, dominated by
+driver-side planning and scheduling, which the threads overlap; the
+scheduler shares the executors between the jobs. Each thread carries
+the caller's job group, local properties and session tags, so
+cancelling the caller's group or tag cancels the gold jobs too.
+Failure: every table is attempted, the other writes run to
+completion, and the first failure (in GOLD_TABLES order) is raised
+once all have finished; the tables that were written stay written
+(each write is an overwrite, so a rebuild replaces them).
 """
 
 from __future__ import annotations
 
+from concurrent.futures import ThreadPoolExecutor
+
 from pyspark.sql import SparkSession
+from pyspark.util import inheritable_thread_target
 
 from bigdata_project_spark.registry import REGISTRY, _ensure_loaded
 
@@ -25,12 +40,18 @@ GOLD_TABLES = {
 
 
 def build_gold(spark: SparkSession, sf_dir: str, out_dir: str) -> dict[str, str]:
-    """Materialize every gold table; returns table -> path."""
+    """Materialize every gold table concurrently; returns table -> path.
+    Raises the first failure after every table was attempted."""
     _ensure_loaded()
-    paths = {}
-    for query_name, table in GOLD_TABLES.items():
+    paths = {table: f"{out_dir}/{table}" for table in GOLD_TABLES.values()}
+
+    @inheritable_thread_target(spark)
+    def build(query_name: str) -> None:
         df = REGISTRY[query_name].fn(spark, sf_dir)
-        path = f"{out_dir}/{table}"
-        df.write.mode("overwrite").parquet(path)
-        paths[table] = path
+        df.write.mode("overwrite").parquet(paths[GOLD_TABLES[query_name]])
+
+    with ThreadPoolExecutor(len(GOLD_TABLES)) as pool:
+        futures = [pool.submit(build, query_name) for query_name in GOLD_TABLES]
+    for f in futures:
+        f.result()
     return paths

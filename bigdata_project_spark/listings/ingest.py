@@ -81,13 +81,20 @@ def extract_from_api(raw: DataFrame) -> DataFrame:
 def silver_transform(df: DataFrame) -> DataFrame:
     """Clean/standardize a bronze listing frame (EP1 steps 4-5 +
     the declared streaming 'Clean data / Transformations' stage,
-    README.md:20-21): drop malformed, dedup by id (deterministic:
-    keep max post_time then max of remaining columns is irrelevant —
-    ids are unique per crawl; cross-crawl re-posts keep the latest),
-    event-time column from epoch millis."""
+    README.md:20-21): drop malformed, dedup by id, event-time column
+    from epoch millis.
+
+    Dedup keeps, per id, the latest post_time (cross-crawl re-posts
+    keep the newest copy); copies with equal post_time are ordered by
+    every remaining column, ascending with NULLs first and NaN last
+    (Spark's ordering), so the winner is the same whatever order the
+    scan yields the copies in. Only copies equal in every column (one
+    row, however many times it was read) remain interchangeable."""
+    tie_break = [F.col(c).asc_nulls_first() for c in df.columns if c not in ("id", "post_time")]
+    by_latest = W.partitionBy("id").orderBy(F.desc_nulls_last("post_time"), *tie_break)
     deduped = (
         df.filter(F.col("id").isNotNull())
-        .withColumn("_rn", F.row_number().over(W.partitionBy("id").orderBy(F.desc_nulls_last("post_time"))))
+        .withColumn("_rn", F.row_number().over(by_latest))
         .filter(F.col("_rn") == 1)
         .drop("_rn")
     )
@@ -96,22 +103,20 @@ def silver_transform(df: DataFrame) -> DataFrame:
     )
 
 
-def silver_split(df: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """silver_transform + the r7 audit gates as a SPLIT (round 8):
-    returns (silver, quarantined). The audits that only MEASURED
-    corruption last round now act — rows with out-of-window/NULL event
+def silver_flagged(df: DataFrame) -> DataFrame:
+    """silver_transform plus the quarantine reason column (NULL on
+    clean rows): the r7 audit gates as a split (round 8), the one frame
+    both sinks of the quarantine gate are filtered from
+    (quarantine.split_flagged). Rows with out-of-window/NULL event
     time (watermark poison; the range where bucketing idioms disagree)
-    or NaN/Inf in a declared measure (exact-sum tier poison) are
-    routed to the quarantine frame with a reason column instead of
-    reaching the lake. Same gate the registered
-    silver_quarantine_split query summarizes over the testbed."""
-    from bigdata_project_spark.quarantine import split_quarantine
+    or NaN/Inf in a declared measure (exact-sum tier poison) get a
+    reason. Same gate the registered silver_quarantine_split query
+    summarizes over the testbed."""
+    from bigdata_project_spark.quarantine import REASON_COL, quarantine_reason
 
-    silver = silver_transform(df)
     # only the DOUBLE measures can hold NaN/Inf — price/area_m2 are
     # LongType by schema and cannot be non-finite
-    return split_quarantine(
-        silver,
+    reason = quarantine_reason(
         F.col("event_time"),
         {
             "price_per_m2": F.col("price_per_m2"),
@@ -119,6 +124,7 @@ def silver_split(df: DataFrame) -> tuple[DataFrame, DataFrame]:
             "lng": F.col("lng"),
         },
     )
+    return silver_transform(df).withColumn(REASON_COL, reason)
 
 
 def write_lake(df: DataFrame, path: str, mode: str = "append") -> None:
@@ -132,8 +138,30 @@ def write_lake_with_quarantine(df: DataFrame, path: str, quarantine_path: str,
                                mode: str = "append") -> None:
     """Gold sink with the quarantine side output: clean rows land in
     the date-partitioned lake, flagged rows (with quarantine_reason)
-    in a flat side table for triage/restore. Both sinks read the same
-    shuffle-free silver plan — the gate adds no exchange."""
-    clean, quarantined = silver_split(df)
-    write_lake(clean, path, mode=mode)
-    quarantined.write.mode(mode).parquet(quarantine_path)
+    in a flat side table for triage/restore.
+
+    Both sinks are filters of one silver evaluation: the flagged
+    silver frame (bronze scan + the id dedup exchange + the reason
+    column) is persisted, filled once and read by both writes, so the
+    input is scanned once and shuffled once. Without the persist each write would re-run the
+    scans and the dedup exchange. The cache lives only inside this
+    call and is released in a `finally`, also when a write fails. Cost
+    at scale: silver is held at persist()'s default level
+    (MEMORY_AND_DISK_DESER), so
+    a 100 TB silver spills to the executors' local disks between the
+    two writes — one write and one read of silver on local disk,
+    instead of a second scan of the landing zone and a second full
+    shuffle. Output file count: a cached plan keeps its output
+    partitioning (AQE does not coalesce it while
+    spark.sql.optimizer.canChangeCachedPlanOutputPartitioning is off,
+    its default), so the lake gets up to one file per shuffle
+    partition and date."""
+    from bigdata_project_spark.quarantine import split_flagged
+
+    flagged = silver_flagged(df).persist()
+    try:
+        clean, quarantined = split_flagged(flagged)
+        write_lake(clean, path, mode=mode)
+        quarantined.write.mode(mode).parquet(quarantine_path)
+    finally:
+        flagged.unpersist()

@@ -22,8 +22,13 @@ Contract (mirrors the audits exactly):
   order within measures); clean rows get NULL reason.
 
 Scale: the reason column is a single CASE chain inside whole-stage
-codegen; the split is two filters over one scan (Spark computes both
-sinks from the same shuffle-free plan), so the gate adds no exchange.
+codegen and adds no exchange. The split is two filters of the flagged
+frame; two writes of two lazy filters would each re-run the whole
+input plan (scan and any exchange under it), so a caller writing both
+sides persists the flagged frame once and filters the cache
+(`listings.write_lake_with_quarantine`: one scan, one dedup exchange;
+at 100 TB the persisted silver spills to executor local disk at the
+MEMORY_AND_DISK level).
 """
 
 from __future__ import annotations
@@ -61,12 +66,10 @@ def quarantine_reason(ts_col: Column | None, measure_cols: dict[str, Column]) ->
     return reason
 
 
-def split_quarantine(
-    df: DataFrame, ts_col: Column | None, measure_cols: dict[str, Column]
-) -> tuple[DataFrame, DataFrame]:
-    """(clean, quarantined): clean drops the reason column, quarantined
-    carries it for triage/restore."""
-    flagged = df.withColumn(REASON_COL, quarantine_reason(ts_col, measure_cols))
+def split_flagged(flagged: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(clean, quarantined) filters of a frame carrying the REASON_COL
+    column: clean drops the reason column, quarantined carries it for
+    triage/restore."""
     clean = flagged.filter(F.col(REASON_COL).isNull()).drop(REASON_COL)
     quarantined = flagged.filter(F.col(REASON_COL).isNotNull())
     return clean, quarantined

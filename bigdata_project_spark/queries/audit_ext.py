@@ -846,7 +846,7 @@ def silver_quarantine_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     passes — in-contract for the exact-sum tier), else 'clean'.
 
     The listings pipeline applies the same gate as a SPLIT
-    (quarantine.split_quarantine inside listings.silver_split — e2e
+    (quarantine.quarantine_reason inside listings.silver_flagged — e2e
     test writes the side output); this summary form is what the
     pipeline owner monitors, and the driver's degenerate twins
     (nonfinite/null-injected events) exercise the non-clean branches

@@ -4,14 +4,17 @@ analytics — the reference's whole production DAG, distributed."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
+from bigdata_project_spark.caching import persistent_rdd_ids
 from bigdata_project_spark.listings.crawl import crawl_to_dataframe
 from bigdata_project_spark.listings.ingest import (
     silver_transform,
     write_lake,
     write_lake_with_quarantine,
 )
+from bigdata_project_spark.listings.schema import LISTING_SCHEMA
 from tests.test_crawl import make_fake_api
 
 
@@ -98,3 +101,88 @@ def test_silver_quarantine_side_output(spark, tmp_path):
     # nothing else was dropped: clean + quarantined partitions the input
     silver_n = silver_transform(bronze).count()
     assert back.count() + len(quarantined) == silver_n
+
+
+def _parquet_bronze(spark, tmp_path, df):
+    """The bronze frame as a file scan, so stage input metrics count it."""
+    path = str(tmp_path / "bronze")
+    df.write.parquet(path)
+    return spark.read.schema(LISTING_SCHEMA).parquet(path)
+
+
+def _group_input_records(spark, group: str) -> int:
+    """Summed inputRecords of the completed stages of a job group's jobs."""
+    sc = spark.sparkContext
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    store = jsc.statusStore()
+    total = 0
+    for job_id in sc.statusTracker().getJobIdsForGroup(group):
+        for sid in sc.statusTracker().getJobInfo(job_id).stageIds:
+            try:
+                st = store.lastStageAttempt(sid)
+            except Exception:  # noqa: BLE001 - a skipped stage never ran
+                continue
+            if st.status().toString() == "COMPLETE":
+                total += st.inputRecords()
+    return total
+
+
+def test_quarantine_sinks_scan_once_and_release(spark, tmp_path):
+    """Lake and quarantine are filters of ONE silver evaluation: the
+    bronze input is read once (not once per sink), and the frame
+    persisted for the two writes is released, also when the second
+    write fails."""
+    crawl = crawl_to_dataframe(spark, limit_rows=200, fetcher=make_fake_api(200), sleep_s=0)
+    bronze = _parquet_bronze(spark, tmp_path, crawl)
+    n_bronze = bronze.count()
+    before = persistent_rdd_ids(spark)
+    sc = spark.sparkContext
+    sc.setJobGroup("quarantine-sinks", "write_lake_with_quarantine")
+    try:
+        write_lake_with_quarantine(bronze, str(tmp_path / "lake"), str(tmp_path / "q"), mode="overwrite")
+    finally:
+        sc._jsc.clearJobGroup()
+    # the bronze rows once; each sink's read of the cache adds one input
+    # record per cached column batch (one batch per partition here),
+    # a handful next to the second full scan the shared frame replaces
+    assert n_bronze <= _group_input_records(spark, "quarantine-sinks") < 2 * n_bronze
+    assert persistent_rdd_ids(spark) == before
+
+    # second sink fails: its path is a regular file
+    occupied = tmp_path / "occupied"
+    occupied.write_text("not a directory")
+    with pytest.raises(Exception):
+        write_lake_with_quarantine(bronze, str(tmp_path / "lake2"), str(occupied))
+    assert (tmp_path / "lake2" / "_SUCCESS").exists()  # the first sink was written
+    assert persistent_rdd_ids(spark) == before
+
+
+def _listing(i: int, post_time: int, lat: float = 21.0) -> tuple:
+    return (i, f"t{i}", "b", 1000 * i, 50, 20.0 * i, "R", "D", "W", "S", lat, 105.8, None, 1010, post_time, 1)
+
+
+def test_quarantine_split_partitions_one_silver_evaluation(spark, tmp_path):
+    """Two copies of one id with EQUAL post_time, one with a NaN
+    latitude (quarantine) and one finite (lake): the total tie-break
+    picks the same winner whatever the scan order, so the id lands in
+    exactly one sink, and lake + quarantine hold every silver id once."""
+    t = 1765504156000
+    tie = 7
+    others = [_listing(i, t) for i in range(1, 6)]
+    nan_copy, finite_copy = _listing(tie, t, float("nan")), _listing(tie, t, 21.5)
+    winners = set()
+    for n, order in enumerate(([nan_copy, finite_copy], [finite_copy, nan_copy])):
+        # one bronze file, the two copies first and in the given order
+        d = tmp_path / f"order{n}"
+        bronze = _parquet_bronze(spark, d, spark.createDataFrame(order + others, LISTING_SCHEMA).coalesce(1))
+        lake, qdir = str(d / "lake"), str(d / "q")
+        write_lake_with_quarantine(bronze, lake, qdir, mode="overwrite")
+        lake_rows = spark.read.parquet(lake).select("id", "lat").collect()
+        q_ids = [r["id"] for r in spark.read.parquet(qdir).select("id").collect()]
+        lake_ids = [r["id"] for r in lake_rows]
+        assert (lake_ids + q_ids).count(tie) == 1
+        assert len(lake_ids) + len(q_ids) == silver_transform(bronze).select("id").distinct().count() == 6
+        winners.update(r["lat"] for r in lake_rows if r["id"] == tie)
+    # NaN sorts last, so the finite copy wins in both scan orders
+    assert winners == {21.5}
